@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: JSON result line(s), per-query seconds.
   *
@@ -26,15 +25,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.Tool.session("graft-bench")
     // Calibration micro-benchmark: a fixed, SF-independent workload
     // (hash-agg over a generated range — no IO) timed the same
     // min-of-N way. Cross-round absolute seconds have repeatedly moved
@@ -78,16 +70,13 @@ object Bench {
       }
       times.min
     }
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Short queries get extra warm runs: min-of-3 on a ~2 s query
     // still swings ±30% with sandbox noise (three rounds of r7–r9
     // cross-window drift traced to exactly this), so rows whose min is
     // under `extraBelowSec` after the base runs take min-of-5.
     val extraRuns = sys.env.getOrElse("SPARK_GRAFT_EXTRA_RUNS", "5").toInt
     val extraBelowSec = 3.0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = GraftSession.Tool.queries.map { case (name, fn) =>
       def timeOnce(): Double = {
         spark.catalog.clearCache()
         System.gc() // drain accumulated broadcasts/codegen garbage so
@@ -163,7 +152,7 @@ object Bench {
     // map, and a 2-query filtered run overwriting it destroys that
     // artifact (it happened in round 12).
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isDefined) "BENCH_FILTERED.json" else "BENCH_FULL.json")
+      if (GraftSession.Tool.only.isDefined) "BENCH_FILTERED.json" else "BENCH_FULL.json")
     try {
       val w = new java.io.PrintWriter(outFile, "UTF-8")
       try w.println(fullLine) finally w.close()

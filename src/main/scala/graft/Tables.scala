@@ -30,14 +30,14 @@ object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "region")
   /** `events.ts` has shipped in two parquet encodings across corpus
     * generations: TIMESTAMP(NANOS) (rejected by Spark's vectorized
-    * reader — read as raw nanos via the legacy conf and divide down) and
-    * plain TIMESTAMP(MICROS)/NTZ (read directly; cast to session-local
+    * reader — read as raw nanos via the legacy `nanosAsLong` conf that
+    * [[GraftSession]] sets, and divided down) and plain
+    * TIMESTAMP(MICROS)/NTZ (read directly; cast to session-local
     * TimestampType so downstream window/session ops see one type).
     * Dispatch on the loaded schema so either corpus works. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = apply(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>

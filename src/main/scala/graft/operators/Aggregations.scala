@@ -119,16 +119,6 @@ object Aggregations {
         count(when(predicate.isNull, 1)).as("null_count"))
       .orderBy(groupBy.map(col): _*)
 
-  /** Arbitrary SQL aggregation — the escape hatch the reference exposes
-    * as `database_aggregator.py` (named SQL templates). Runs through
-    * `spark.sql`, so Catalyst still optimizes (pushdown, broadcast).
-    * Caller registers temp views first.
-    */
-  def databaseAggregator(df: DataFrame, viewName: String, sql: String): DataFrame = {
-    df.createOrReplaceTempView(viewName)
-    df.sparkSession.sql(sql)
-  }
-
   /** Two-stage SALTED aggregation for skewed keys. Algebraic aggregates
     * already partial-combine map-side, but non-algebraic ones
     * (collect_list/set) ship every row of a key to ONE reducer — a

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -17,8 +17,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * accumulator-backed aggregate that piggybacks on the pass the plan
   * already runs: zero extra jobs, zero extra shuffles, and unlike a
   * second `count()` action it can never disagree with the run it
-  * describes), and a session-registered [[QueryExecutionListener]]
-  * turns any non-zero count into one WARN line at query completion.
+  * describes), and [[CapMetrics.Listener]] turns any non-zero count
+  * into one WARN line at query completion.
   * Catalyst does not push filters through a `CollectMetrics` node, so
   * the metric always sees every over-cap bucket of its run.
   *
@@ -27,13 +27,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * serial suffix; the stable `kind` stays first for log grepping. */
 object CapMetrics {
   private val serial = new AtomicLong()
-  // weak keys: a stopped session must be collectible — a static strong
-  // set would pin every session (and its listener bus) forever in a
-  // long-lived multi-session service
-  private val registered =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Prefix every cap observation name carries — listeners (ours and
@@ -46,47 +39,24 @@ object CapMetrics {
     * unchanged data-wise; apply the cap filter ABOVE the result. */
   private[graft] def observeDrops(
       buckets: DataFrame, kind: String, over: Column,
-      droppedPairs: Column): DataFrame = {
-    ensureListener(buckets.sparkSession)
+      droppedPairs: Column): DataFrame =
     buckets.observe(s"$namePrefix${kind}_${serial.incrementAndGet()}",
       sum(when(over, lit(1L)).otherwise(lit(0L))).as("dropped_buckets"),
       sum(when(over, droppedPairs).otherwise(lit(0L)))
         .cast("long").as("dropped_pairs"))
-  }
 
-  /** AQE's `AQEPropagateEmptyRelation` replaces everything downstream
-    * of an empty stage with an `EmptyRelation` — and the physical
-    * `CollectMetricsExec` vanishes from the finalized plan, so
-    * `observedMetrics` comes back EMPTY in exactly the case this
-    * module exists for (every candidate pair capped away ⇒ empty
-    * output ⇒ empty stage). Excluding that one rewrite keeps the
-    * metric node in the executed plan; the cost is that a genuinely
-    * empty stage still runs its (empty, milliseconds) downstream ops
-    * — noise against the shuffle the miner already paid. Appended to
-    * any exclusions the session already carries. */
-  private def ensureMetricsSurviveAqe(spark: SparkSession): Unit = {
-    val rule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
-    val key = "spark.sql.adaptive.optimizer.excludedRules"
-    val cur = spark.conf.getOption(key).getOrElse("")
-    if (!cur.contains(rule))
-      spark.conf.set(key, if (cur.isEmpty) rule else s"$cur,$rule")
+  /** Turns a non-zero cap count into one WARN line at query
+    * completion; [[graft.GraftSession]] installs it on every session
+    * through `spark.sql.queryExecutionListeners`. */
+  class Listener extends QueryExecutionListener {
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      qe.observedMetrics.foreach { case (name, row) =>
+        if (name.startsWith(namePrefix) && !row.isNullAt(0) && row.getLong(0) > 0L)
+          log.warn(
+            s"skew cap '$name': dropped ${row.getLong(0)} over-cap bucket(s) " +
+              s"(~${row.getLong(1)} candidate pairs) — recall loss is bounded " +
+              "but real; raise maxBucket or pre-split the hot keys if it matters")
+      }
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
   }
-
-  private def ensureListener(spark: SparkSession): Unit =
-    if (registered.add(spark)) {
-      ensureMetricsSurviveAqe(spark)
-      spark.listenerManager.register(new QueryExecutionListener {
-        override def onSuccess(
-            funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-          qe.observedMetrics.foreach { case (name, row) =>
-            if (name.startsWith(namePrefix) && !row.isNullAt(0) && row.getLong(0) > 0L)
-              log.warn(
-                s"skew cap '$name': dropped ${row.getLong(0)} over-cap bucket(s) " +
-                  s"(~${row.getLong(1)} candidate pairs) — recall loss is bounded " +
-                  "but real; raise maxBucket or pre-split the hot keys if it matters")
-          }
-        override def onFailure(
-            funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-      })
-    }
 }

@@ -137,16 +137,8 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
-  /** Session-wide side effect (shared by every capped miner): the
-    * first call registers the [[CapMetrics]] listener and appends
-    * `AQEPropagateEmptyRelation` to the session's excluded AQE rules —
-    * otherwise the observed drop metric vanishes exactly when every
-    * candidate is capped away (empty stage → the metrics node is
-    * rewritten out). The exclusion persists for the session's
-    * lifetime: unrelated queries lose that one AQE rewrite (an empty
-    * stage still runs its empty, milliseconds-cheap downstream ops).
-    * Documented here — at the public entry — because a library call
-    * altering session planner config must be visible to the caller. */
+  /** Capped miner: buckets past `maxBucket` are dropped and counted
+    * through [[CapMetrics]]. */
   def minhashCandidates(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -658,9 +650,8 @@ object Dedup {
       .select(col("doc_id"), col("hi"), col("lo"),
         col("cb.chunk").as("chunk"), col("cb.ckey").as("ckey"))
 
-  /** Carries the same session-wide CapMetrics side effect as
-    * [[minhashCandidates]] (AQE empty-relation rule excluded for the
-    * session so cap-drop metrics survive) — see that entry's note. */
+  /** Capped miner: buckets past `maxBucket` are dropped and counted
+    * through [[CapMetrics]], like [[minhashCandidates]]. */
   private[graft] def mineHammingPairs(
       simDf: DataFrame, maxHamming: Int, maxBucket: Int): DataFrame = {
     val chunked = hammingChunks(simDf)
@@ -1678,12 +1669,13 @@ object Dedup {
     * the session's full shuffle-partition count makes every stage pay
     * per-task launch overhead for empty partitions. Partitions scale
     * linearly with edges up to the session's configured ceiling —
-    * never above it — and AQE is switched off for the loop ONLY in the
-    * coalesce regime (partitions below the ceiling), where each round
-    * is a handful of trivially small stages and AQE's per-stage
-    * re-planning is pure latency; at-scale graphs keep the session's
-    * AQE (skew splits) and pay one up-front repartition on the join
-    * key so the big edge side is exchanged once, not once per round.
+    * never above it. Below the ceiling the edge table is narrowed by a
+    * plan-local `coalesce` (no shuffle); the rounds' own shuffles run
+    * at the session's conf, and AQE coalesces their empty partitions.
+    * At-scale graphs pay one up-front repartition on the join key so
+    * the big edge side is exchanged once, not once per round. The
+    * operator never changes session conf, so jobs that other driver
+    * threads plan meanwhile see the session as configured.
     *
     * Small-graph fast path (the same shape as Spark's own
     * size-adaptive broadcast decision): a `limit(threshold+1)` probe
@@ -1771,15 +1763,10 @@ object Dedup {
     // join key so every round's join reuses the cached partitioning
     // and only shuffles the ids-only label frame. Small-graph path:
     // narrow coalesce (no shuffle) down to `parts`.
+    // Round shuffles run at the session's conf; AQE coalesces them.
     val sym =
       if (coalesced) symBase.coalesce(math.max(parts, 1))
       else symBase.repartition(col("dst")).persist()
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (coalesced) {
-      spark.conf.set("spark.sql.shuffle.partitions", math.max(parts, 1))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-    }
     try {
     // No separate label-initialization pass: labels materialize for
     // the first time as round 0's output (see below). Each round's
@@ -1854,8 +1841,6 @@ object Dedup {
       counted.localCheckpoint()
       counted.count()
       changed = acc.value
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iter changed=$changed")
       labels = org.apache.spark.sql.graft.ColumnBridge
         .internalCreateDataFrame(spark, counted, schema)
         .select("node", "component")
@@ -1863,14 +1848,9 @@ object Dedup {
     }
     require(changed == 0L,
       s"connectedComponents did not converge in $maxIter rounds")
-    // The ordering shuffle runs at the CALLER's conf (restored below);
-    // labels itself is already materialized checkpoint blocks.
+    // labels itself is already materialized checkpoint blocks
     labels.orderBy("node")
     } finally {
-      if (coalesced) {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
       sym.unpersist()
       symBase.unpersist()
     }

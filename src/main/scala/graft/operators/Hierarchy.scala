@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Hierarchy operators — the reference's taxonomy machinery.
   *
@@ -46,7 +47,16 @@ object Hierarchy {
     */
   def nestedSet(nodes: DataFrame, siblingBucketWidth: Long = 0L): DataFrame = {
     val ids = nodes.select("node_id", "parent_id", "sort_key")
-    val closure = ancestorClosure(ids).persist() // reused: sizes + lft
+    // read twice (sizes + lft), so computed once into locally
+    // checkpointed blocks that go with the frame (a persist would stay
+    // in the session's cache manager after the result is consumed).
+    // Built over the bare rows: Spark 4.1 fails to infer constraints
+    // through a union of checkpointed frontiers (`key not found:
+    // ancestor_id` in Union.rewriteConstraints), so no plan above may
+    // see the closure's union.
+    val closureRows = ancestorClosure(ids)
+    val closure = ColumnBridge.internalCreateDataFrame(ids.sparkSession,
+      closureRows.queryExecution.toRdd.map(_.copy()).localCheckpoint(), closureRows.schema)
     // |subtree(a)| = closure rows with ancestor a (self included)
     val sizes = closure.groupBy(col("ancestor_id").as("node_id"))
       .agg(count(lit(1)).as("size"))

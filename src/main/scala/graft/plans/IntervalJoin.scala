@@ -24,8 +24,9 @@ import org.apache.spark.sql.types.LongType
   * reference scale.
   *
   * Wiring: [[IntervalJoinPlan]] (logical) is planned by
-  * [[IntervalJoinStrategy]] (auto-registered on first use, or via
-  * `GraftExtensions`) into [[IntervalStabbingJoinExec]] (physical).
+  * [[IntervalJoinStrategy]] (injected by `GraftExtensions`, which
+  * [[graft.GraftSession]] installs) into [[IntervalStabbingJoinExec]]
+  * (physical).
   * The point side streams partition-parallel and is never shuffled or
   * collected; only the interval side must fit in driver/executor
   * memory, the same contract as any broadcast join build side.
@@ -171,7 +172,6 @@ object IntervalJoin {
       points: DataFrame, intervals: DataFrame,
       pointCol: String, loCol: String, hiCol: String): DataFrame = {
     val spark: SparkSession = points.sparkSession
-    ColumnBridge.addStrategy(spark, IntervalJoinStrategy)
     val iv = intervals.select(intervals.columns.map(c => intervals(c).as(c)): _*)
     def longExpr(df: DataFrame, c: String): Expression =
       Cast(ColumnBridge.expression(df(c)), LongType)

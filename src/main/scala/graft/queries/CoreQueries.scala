@@ -9,7 +9,10 @@ import graft.operators._
 object CoreQueries {
 
   /** Classic dim-join aggregation used as the flagship entry:
-    * revenue per nation (auto-broadcast dims, one shuffle on n_name). */
+    * revenue per nation (auto-broadcast dims, one shuffle on n_name).
+    * Also the `q_database_aggregator` gate: the reference's
+    * `database_aggregator.py` SQL-template escape hatch is plain
+    * temp views + `spark.sql`, which Catalyst still optimizes. */
   def revenueByNation(spark: SparkSession, dir: String): DataFrame = {
     Seq("lineitem", "supplier", "nation").foreach { t =>
       Tables(spark, dir, t).createOrReplaceTempView(t)

@@ -58,9 +58,9 @@ object HierarchyQueries {
     // subtree. The oracle counts subtree membership relationally —
     // wrong labels or wrong stabbing both break the match.
     "q_interval_join" -> { (s, dir) =>
-      // labeled tree feeds BOTH join sides — persist or the whole
-      // labeling plan executes twice (once per side)
-      val ns = Hierarchy.nestedSet(taxonomyNodes(s, dir)).persist()
+      // the labeled tree feeds both join sides: labeled once, into
+      // blocks that go with the frame (a persist would outlive it)
+      val ns = Hierarchy.nestedSet(taxonomyNodes(s, dir)).localCheckpoint(eager = false)
       val regions = ns.where(col("level") === 1).select(
         col("node_id").as("anc_id"),
         col("lft").as("anc_lft"), col("rght").as("anc_rght"))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.SparkStrategy
 
 /** Spark 4 detached the public Column API from Catalyst Expressions
   * (Spark Connect refactor); the classic bridges (`ExpressionUtils`,
@@ -32,14 +31,4 @@ object ColumnBridge {
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
-
-  /** Idempotently register an extra planner strategy on a live session
-    * (the imperative twin of `injectPlannerStrategy` for sessions not
-    * built with `spark.sql.extensions`). */
-  def addStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(s)) {
-      exp.extraStrategies = exp.extraStrategies :+ s
-    }
-  }
 }

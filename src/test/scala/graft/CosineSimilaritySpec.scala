@@ -34,15 +34,19 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("SQL registration makes cosine_sim callable from spark.sql") {
-    GraftFunctions.register(spark)
-    Seq((Seq(3.0f, 4.0f), Seq(4.0f, 3.0f))).toDF("a", "b")
-      .createOrReplaceTempView("cos_t")
-    val v = spark.sql("SELECT cosine_sim(a, b) AS c FROM cos_t").head.getDouble(0)
+    // the shared session has it through GraftExtensions; register must
+    // restore it on a session whose registry lacks it
+    val s = spark.newSession()
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")
+    assert(s.sessionState.functionRegistry.dropFunction(id))
+    val q = "SELECT cosine_sim(array(3F, 4F), array(4F, 3F)) AS c"
+    intercept[org.apache.spark.sql.AnalysisException](s.sql(q))
+    GraftFunctions.register(s)
+    val v = s.sql(q).head.getDouble(0)
     assert(math.abs(v - 0.96) < 1e-12)
   }
 
   test("hash expressions are callable from spark.sql with literal counts") {
-    GraftFunctions.register(spark)
     Seq(Tuple1("the quick brown fox jumps")).toDF("text")
       .createOrReplaceTempView("hash_t")
     val r = spark.sql("""
@@ -58,7 +62,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("round-6 expressions are callable from spark.sql") {
-    GraftFunctions.register(spark)
     Seq(Tuple1("a b a b a")).toDF("text").createOrReplaceTempView("r6_t")
     val r = spark.sql("""
       SELECT repetition_stats(split(text, ' ')) AS st,
@@ -116,7 +119,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("repetition_stats skips null elements with filter() adjacency semantics") {
-    GraftFunctions.register(spark)
     val r = spark.sql("""
       SELECT repetition_stats(array('a', CAST(NULL AS STRING), 'b', 'a', 'b')) AS st""").head
     val st = r.getStruct(0)
@@ -128,7 +130,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("heavy_hitters tie-break uses UTF-8 byte order like Spark's sort") {
-    GraftFunctions.register(spark)
     // U+FF41 (UTF-16 0xFF41; UTF-8 EF BD 81) vs U+1F600 (UTF-16 leads
     // 0xD83D; UTF-8 F0 9F 98 80): UTF-16 code-unit order puts the emoji
     // first, UTF-8 byte order puts U+FF41 first. Spark/DuckDB sort by

@@ -54,7 +54,6 @@ class HashExpressionsSpec extends SparkSpec {
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getInt(0) == r.getInt(1)))
     // empty + null-element edges, through the SQL registry
-    graft.functions.GraftFunctions.register(spark)
     val er = spark.sql(
       "SELECT max_multiplicity(CAST(array() AS array<string>)) AS e," +
         " max_multiplicity(array('a', NULL, 'a')) AS n").head()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, HashJoin, SortMergeJoinExec}
 
 /** SURVEY.md §7.1 as executable regressions: the plan-shape claims
   * (pushdown, pruning, broadcast, shuffle counts) are asserted against
@@ -143,9 +143,17 @@ class PlanAuditSpec extends SparkSpec {
 
   test("span dedup keeps partial aggregation and no pairwise join") {
     val plan = executed(SparkEntry.queries("q_span_dedup")(spark, dir))
-    val aggs = plan.map(_.toString).filter(_.contains("HashAggregate"))
-    assert(aggs.exists(_.contains("partial_"))) // map-side combine of repeats
-    assert(!plan.exists(p => p.nodeName.contains("Join"))) // regroup, not self-join
+    val aggs = plan.map(_.toString).filter(_.contains("Aggregate"))
+    // map-side combine of repeats, keyed on the 128-bit window hashes
+    assert(aggs.exists(a => a.contains("partial_") && a.contains("keys=[__h1")))
+    assert(!aggs.exists(a => a.contains("keys=[span") || a.contains("key=[span")))
+    assert(!plan.exists(p =>
+      Seq("nestedloop", "cartesian").exists(p.nodeName.toLowerCase.contains)))
+    // exactly one join, an equi-join: the survivors-only span slice —
+    // the exploded window mass itself is never joined
+    val joins = plan.filter(_.nodeName.contains("Join"))
+    assert(joins.size == 1, joins.map(_.nodeName))
+    assert(joins.head.isInstanceOf[HashJoin] || joins.head.isInstanceOf[SortMergeJoinExec])
   }
 
   test("ngram top-k is TakeOrdered, not a global window over the corpus") {
